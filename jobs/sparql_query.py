@@ -7,9 +7,11 @@ property paths, OPTIONAL/UNION/EXISTS/NOT EXISTS/MINUS/VALUES,
 FILTER/BIND, aggregates/HAVING, DISTINCT/ORDER/LIMIT) and prints the
 bindings as NDJSON or writes them to parquet.
 
-Constant-predicate patterns partition-prune the pred_key layout
-(directory-level: only that predicate's files are read); everything
-else is the documented join/aggregate compilation.
+The table is projected to ``subj, pred, obj`` before the query sees
+it, so constant-predicate patterns filter ``pred`` in the scan but do
+NOT prune the pred_key partition directories: every data file of the
+table is read.  Everything else is the documented join/aggregate
+compilation.
 
 Query spec (JSON)::
 

@@ -7,14 +7,15 @@ shape; the reference emits the same triples through rdflib,
 `/root/reference/mc2skos/record.py` via `process_record`).
 
 Each triple pattern is ONE filtered scan of the triple table:
-constants become pushed-down predicate filters (partition-pruning
-when the table is partitioned by ``pred``, which the Icebergish
-triple sink is), variables project to columns, and shared variables
-across patterns become equi-join keys.  A BGP of k patterns is
-therefore k scans + (k−1) hash joins — Catalyst reorders and
-AQE broadcasts the small filtered sides, which is the textbook
-distributed-SPARQL plan (SPARQLGX, Graux et al. 2016 compiles BGPs
-to exactly this Spark shape).
+constants become pushed-down filters on ``subj``/``pred``/``obj``,
+variables project to columns, and shared variables across patterns
+become equi-join keys.  The pushdown skips parquet row groups at
+best: the published table is partitioned by the derived ``pred_key``,
+which a ``pred`` filter does not prune, so every data file is opened.
+A BGP of k patterns is therefore k scans + (k−1) hash joins —
+Catalyst reorders and AQE broadcasts the small filtered sides, which
+is the textbook distributed-SPARQL plan (SPARQLGX, Graux et al. 2016
+compiles BGPs to exactly this Spark shape).
 
 Scale notes: selective patterns (constant ``pred`` + constant
 ``subj``/``obj``) shrink to broadcast size after pushdown; the join

@@ -12,6 +12,12 @@ dropped in on a cluster:
   (``os.replace``) recording the snapshot dir, row count and
   per-partition lineage stats (north_rule: partition id, input span,
   row counts, skew stats);
+* those per-file stats come from the parquet footers of the files just
+  written (a driver-side pyarrow read, no Spark job).  Only when the
+  footers cannot reproduce a scan's answer exactly — a missing column
+  statistic, a partition-column key, a key type whose Spark string
+  cast is not reproducible, a float/double/timestamp zone map — is the
+  snapshot read back and aggregated per file instead;
 * readers resolve the *current* manifest; uncommitted snapshot dirs are
   invisible garbage — a mid-write kill leaves the previous snapshot
   intact (snapshot isolation), which is what makes stage resume
@@ -24,6 +30,7 @@ import json
 import os
 import shutil
 import time
+import unicodedata
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -34,9 +41,28 @@ _NULL_FLAGS = ("nullable", "containsNull", "valueContainsNull")
 # (decimal is excluded: Decimal→JSON loses exactness, and a lexical
 # string compare of "9.5" vs "10.5" would prune WRONG files — worse
 # than no pruning.)
-_STATS_TYPES = ("byte", "short", "int", "bigint", "float", "double",
+_STATS_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double",
                 "string", "date", "timestamp", "timestamp_ntz",
                 "boolean")
+
+# Lineage-key types whose ``min/max(key).cast("string")`` the driver
+# reproduces exactly from footer values: the string itself, or str() of
+# an integer.
+_FOOTER_KEY_TYPES = ("string", "tinyint", "smallint", "int", "bigint")
+# Zone-map types whose footer min/max equal Spark's aggregate exactly.
+# Not float/double (parquet statistics order NaN and -0.0 differently
+# from Spark's min/max) and not timestamps (INT96 footers carry no
+# statistics at all).
+_FOOTER_STATS_TYPES = ("tinyint", "smallint", "int", "bigint", "string",
+                       "date", "boolean")
+# Footer key Spark writes in LEGACY datetime rebase mode: stored dates
+# are then hybrid-calendar days, not the proleptic ones pyarrow decodes.
+_LEGACY_DATETIME_KEY = b"org.apache.spark.legacyDateTime"
+# Characters java.net.URI leaves unquoted in a path: unreserved,
+# punctuation, "/" and "@".
+_URI_PATH_CHARS = frozenset(
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
+    "_-!.~'()*,;:$&+=/@")
 
 
 def _stat_key(v):
@@ -58,6 +84,103 @@ def _stat_key(v):
         return iso()
     raise TypeError("unsupported file-statistics value type: %r"
                     % type(v).__name__)
+
+
+def _file_uri(path: str) -> str:
+    """The URI ``input_file_name()`` reports for a local absolute path
+    (Hadoop ``Path.toUri().toString()``): java.net.URI quoting keeps
+    legal path characters and non-ASCII non-space, non-control
+    characters, and percent-encodes the UTF-8 bytes of the rest."""
+    out = []
+    for ch in path:
+        if ch in _URI_PATH_CHARS or (
+                ord(ch) > 0x9F
+                and unicodedata.category(ch) not in ("Zs", "Zl", "Zp")):
+            out.append(ch)
+        else:
+            out.extend("%%%02X" % b for b in ch.encode("utf-8"))
+    return "file://" + "".join(out)
+
+
+def _data_files(snap_dir: str) -> list[str]:
+    """Every data file under ``snap_dir``, skipping the names Spark's
+    file index hides (``_SUCCESS``, ``.crc`` checksums, in-flight
+    copies); ``_``-prefixed names with ``=`` are partition dirs."""
+    def hidden(name):
+        return (name.startswith(".") or name.endswith("._COPYING_")
+                or (name.startswith("_") and "=" not in name))
+    found = []
+    for root, dirs, files in os.walk(snap_dir):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        found.extend(os.path.join(root, f) for f in files if not hidden(f))
+    return found
+
+
+def _chunk_span(md, col: int):
+    """``(min, max, nulls)`` of column ``col`` merged over the row groups
+    of a footer, or None when some chunk lacks the statistics to say.
+    An all-null chunk legitimately has no min/max."""
+    lo = hi = None
+    nulls = 0
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(col).statistics
+        if st is None or not st.has_null_count:
+            return None
+        nulls += st.null_count
+        if st.null_count == rg.num_rows:
+            continue
+        if not st.has_min_max:
+            return None           # e.g. parquet-mr drops binary > 4 KB
+        mn, mx = st.min, st.max
+        lo = mn if lo is None or mn < lo else lo
+        hi = mx if hi is None or mx > hi else hi
+    return lo, hi, nulls
+
+
+def _footer_file_stats(snap_dir: str, schema, key: str,
+                       stat_cols: list[str],
+                       partition_by: list[str] | None) -> list[dict] | None:
+    """Per-file lineage stats of a written snapshot from its parquet
+    footers — what :meth:`IcebergishCatalog._scan_file_stats` computes,
+    without a Spark job.  Returns None whenever the footers cannot
+    reproduce the scan's answer exactly, and the caller scans instead."""
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    in_files = set(types) - set(partition_by or ())
+    if key not in in_files or types[key] not in _FOOTER_KEY_TYPES:
+        return None
+    if any(c not in in_files or types[c] not in _FOOTER_STATS_TYPES
+           for c in stat_cols):
+        return None
+    import pyarrow.parquet as pq
+    cols = list(dict.fromkeys([key] + stat_cols))
+    rows = []
+    for path in _data_files(snap_dir):
+        md = pq.read_metadata(path)
+        if md.num_rows == 0:
+            continue
+        if _LEGACY_DATETIME_KEY in (md.metadata or {}):
+            return None
+        paths = [md.schema.column(i).path for i in range(md.num_columns)]
+        spans = {}
+        for c in cols:
+            if paths.count(c) != 1:
+                return None
+            try:
+                spans[c] = _chunk_span(md, paths.index(c))
+            except UnicodeDecodeError:    # string stats that are not UTF-8
+                return None
+            if spans[c] is None:
+                return None
+        mn, mx, _ = spans[key]
+        rows.append({
+            "file": _file_uri(path), "cnt": md.num_rows,
+            "mn": None if mn is None else str(mn),
+            "mx": None if mx is None else str(mx),
+            "stats": {c: {"min": _stat_key(spans[c][0]),
+                          "max": _stat_key(spans[c][1]),
+                          "nulls": spans[c][2]} for c in stat_cols}})
+    return sorted(rows, key=lambda r: r["file"])
 
 
 def _strip_null_flags(node):
@@ -249,8 +372,9 @@ class IcebergishCatalog:
                         cluster_by: list[str] | None = None) -> dict:
         # validate the stats spec BEFORE any data is written, so a bad
         # spec fails side-effect-free instead of leaving an orphaned
-        # uncommitted snapshot directory behind (the read-back below
-        # uses df.schema verbatim, so validating df here is equivalent)
+        # uncommitted snapshot directory behind (the stats below are
+        # taken over df.schema verbatim, so validating df here is
+        # equivalent)
         stat_cols = list(stats_columns or [])
         if stat_cols:
             by_name = {f.name: f for f in df.schema.fields}
@@ -275,28 +399,17 @@ class IcebergishCatalog:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(snap_dir)
 
-        # Per-file (≈ per-partition) lineage from the persisted data —
-        # a single columnar aggregate over what was just written.
+        # Per-file (≈ per-partition) lineage of what was just written:
+        # from the parquet footers when they can reproduce the scan
+        # aggregate exactly, else from the scan itself.  Both sort by
+        # the file URI, so part_id assignment — and therefore the
+        # manifest bytes — are replay-deterministic.
         key = lineage_key or df.columns[0]
-        # Explicit schema: an empty snapshot has no footer to infer from.
-        written = self.spark.read.schema(df.schema).parquet(snap_dir)
-        # aggregate the key in ITS OWN type and cast after (a string
-        # cast before min/max would order numeric keys lexically);
-        # sort the collected rows so part_id assignment — and therefore
-        # the manifest bytes — are replay-deterministic
-        per_col = [a for c in stat_cols for a in
-                   (F.min(c).alias("__mn_%s" % c),
-                    F.max(c).alias("__mx_%s" % c),
-                    F.count(F.when(F.col(c).isNull(), 1))
-                     .alias("__nu_%s" % c))]
-        stats = sorted(
-            written.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("cnt"),
-                 F.min(key).cast("string").alias("mn"),
-                 F.max(key).cast("string").alias("mx"),
-                 *per_col)
-            .collect(),
-            key=lambda r: r["file"])
+        stats = _footer_file_stats(os.path.abspath(snap_dir), df.schema,
+                                   key, stat_cols, partition_by)
+        if stats is None:
+            stats = self._scan_file_stats(snap_dir, df.schema, key,
+                                          stat_cols)
         base_lineage = list(base["lineage"]) if base else []
         base_dirs = (base.get("dirs", [base["dir"]]) if base else [])
         lineage = base_lineage + [
@@ -305,10 +418,7 @@ class IcebergishCatalog:
              "dir": os.path.basename(snap_dir),
              "input_min": r["mn"], "input_max": r["mx"],
              "row_count": r["cnt"],
-             **({"stats": {c: {"min": _stat_key(r["__mn_%s" % c]),
-                               "max": _stat_key(r["__mx_%s" % c]),
-                               "nulls": r["__nu_%s" % c]}
-                           for c in stat_cols}} if stat_cols else {})}
+             **({"stats": r["stats"]} if stat_cols else {})}
             for i, r in enumerate(stats)
         ]
         row_count = sum(p["row_count"] for p in lineage)
@@ -343,6 +453,36 @@ class IcebergishCatalog:
             json.dump(manifest, fp, indent=1)
         os.replace(tmp, self._manifest_path(table, snapshot_id))  # commit
         return manifest
+
+    def _scan_file_stats(self, snap_dir: str, schema, key: str,
+                         stat_cols: list[str]) -> list[dict]:
+        """Per-file lineage stats by reading the snapshot back — one
+        columnar aggregate grouped by ``input_file_name()`` (a shuffle
+        job plus a result job).  The fallback for what
+        :func:`_footer_file_stats` cannot answer exactly."""
+        # Explicit schema: an empty snapshot has no footer to infer from.
+        written = self.spark.read.schema(schema).parquet(snap_dir)
+        # aggregate the key in ITS OWN type and cast after (a string
+        # cast before min/max would order numeric keys lexically)
+        per_col = [a for c in stat_cols for a in
+                   (F.min(c).alias("__mn_%s" % c),
+                    F.max(c).alias("__mx_%s" % c),
+                    F.count(F.when(F.col(c).isNull(), 1))
+                     .alias("__nu_%s" % c))]
+        rows = (written.groupBy(F.input_file_name().alias("file"))
+                .agg(F.count(F.lit(1)).alias("cnt"),
+                     F.min(key).cast("string").alias("mn"),
+                     F.max(key).cast("string").alias("mx"),
+                     *per_col)
+                .collect())
+        return sorted(
+            ({"file": r["file"], "cnt": r["cnt"], "mn": r["mn"],
+              "mx": r["mx"],
+              "stats": {c: {"min": _stat_key(r["__mn_%s" % c]),
+                            "max": _stat_key(r["__mx_%s" % c]),
+                            "nulls": r["__nu_%s" % c]}
+                        for c in stat_cols}} for r in rows),
+            key=lambda r: r["file"])
 
     # ------------------------------------------------------------- read
 

@@ -62,13 +62,14 @@ class MarcXmlReader(DataSourceReader):
             raise ValueError("marcxml source needs .option('paths', "
                              "<JSON array>) or .option('path', "
                              "<file, glob, or comma-list>)")
-        parts = (json.loads(encoded) if encoded
-                 else [p.strip() for p in pattern.split(",")])
-        paths: list[str] = []
-        for part in parts:
-            expanded = sorted(glob.glob(part)) if any(
-                c in part for c in "*?[") else [part]
-            paths.extend(expanded)
+        if encoded:
+            # exact names: "a[1].xml" is that file, not a glob class
+            paths = list(json.loads(encoded))
+        else:
+            paths = []
+            for part in (p.strip() for p in pattern.split(",")):
+                paths.extend(sorted(glob.glob(part)) if any(
+                    c in part for c in "*?[") else [part])
         if not paths:
             raise ValueError("marcxml source matched no files for %r"
                              % (encoded or pattern))

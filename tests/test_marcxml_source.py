@@ -2,6 +2,7 @@
 one partition per file, conv_id filter pushdown pruning whole files,
 row parity with the driver-side loader."""
 
+import json
 import os
 
 import pytest
@@ -58,3 +59,21 @@ def test_comma_list_and_guards(spark):
         MarcXmlReader({"path": "/nonexistent/*.xml"})
     with pytest.raises(ValueError, match="path"):
         MarcXmlReader({})
+
+
+def test_exact_paths_are_not_glob_expanded(spark, tmp_path):
+    record = ('<record xmlns="http://www.loc.gov/MARC21/slim">'
+              '<leader>00000nw  a2200000n  4500</leader></record>')
+    for name in ("a[1].xml", "a1.xml", "a2.xml"):
+        (tmp_path / name).write_text(record, encoding="utf-8")
+    bracketed = str(tmp_path / "a[1].xml")
+    # the JSON 'paths' form names files verbatim: the glob class [1]
+    # would match a1.xml instead
+    assert MarcXmlReader({"paths": json.dumps([bracketed])}).paths == [
+        bracketed]
+    rows = read_marcxml(spark, [bracketed]).collect()
+    assert [(r["record_id"], r["conv_id"]) for r in rows] == [
+        ("a[1]#0", "a[1]")]
+    # the hand-typed 'path' form still globs
+    assert MarcXmlReader({"path": str(tmp_path / "a[12].xml")}).paths == [
+        str(tmp_path / "a1.xml"), str(tmp_path / "a2.xml")]
