@@ -59,8 +59,3 @@ ISO639_2B_TO_1 = {
     "vol": "vo", "wel": "cy", "wln": "wa", "wol": "wo", "xho": "xh",
     "yid": "yi", "yor": "yo", "zha": "za", "zul": "zu",
 }
-
-
-def part2b_to_part1(code: str) -> str:
-    """Map an ISO 639-2/B code to 639-1; raises KeyError when unmapped."""
-    return ISO639_2B_TO_1[code]

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textstats import _once, tokens
+
 
 def shingles(col, n: int = 3):
     """Word n-gram shingles as distinct strings.
@@ -34,9 +36,7 @@ def shingles(col, n: int = 3):
     ``textstats._once``) so the tokenization runs once per row, not
     once per reference — Catalyst does not CSE across HOF bodies.
     """
-    from .textstats import _once
-
-    toks = F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != "")
+    toks = tokens(F.lower(col))
 
     def shingles_of(tk):
         idx = F.sequence(F.lit(0), F.greatest(F.size(tk) - n, F.lit(0)))
@@ -60,9 +60,7 @@ def hashed_shingles(col, n: int = 3):
     ≡ joined-string identity; a 64-bit cross-doc collision admits one
     spurious candidate pair for re-rank, never a missed one.
     """
-    from .textstats import _once
-
-    toks = F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != "")
+    toks = tokens(F.lower(col))
 
     def shingles_of(tk):
         idx = F.sequence(F.lit(0), F.greatest(F.size(tk) - n, F.lit(0)))
@@ -312,8 +310,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     64 separate ``F.aggregate`` passes, one per bit — did ~64× the
     expression work per row.)
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
-                    lambda t: t != "")
+    toks = tokens(F.lower(F.col(text_col)))
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
     masks = F.array(*[F.lit(m).cast("long") for m in _BIT_MASKS])
     # token-less docs all hash to signature 0 and would co-bucket into
@@ -573,8 +570,7 @@ def repeated_substring_spans(df: DataFrame, window: int = 8,
         raise ValueError("repeated_substring_spans: window must be >= 2")
     if min_docs < 2:
         raise ValueError("repeated_substring_spans: min_docs must be >= 2")
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
-                    lambda t: t != "")
+    toks = tokens(F.lower(F.col(text_col)))
 
     empty_wins = F.array().cast("array<struct<pos:int,wkey:bigint>>")
 
@@ -676,8 +672,7 @@ def scrub_substring_spans(df: DataFrame, window: int = 8,
                    F.struct(F.col("span_start").alias("s"),
                             F.col("span_end").alias("e")))
                    .alias("__spans")))
-    toks = F.filter(F.split(F.col(text_col), r"\s+"),
-                    lambda t: t != "")
+    toks = tokens(F.col(text_col))
     kept_toks = F.filter(
         toks,
         lambda t, i: ~F.exists(

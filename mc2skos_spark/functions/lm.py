@@ -167,20 +167,6 @@ def doc_ngram_freq(documents: DataFrame, n: int,
             .agg(F.count(F.lit(1)).cast("long").alias("tf")))
 
 
-def doc_bigram_freq(documents: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """``(id, w1, w2, tf)`` — the order-2 member of
-    :func:`doc_ngram_freq`."""
-    return doc_ngram_freq(documents, 2, id_col, text_col)
-
-
-def doc_trigram_freq(documents: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """``(id, w1, w2, w3, tf)`` — the order-3 member of
-    :func:`doc_ngram_freq`."""
-    return doc_ngram_freq(documents, 3, id_col, text_col)
-
-
 def ngram_nll_scores(documents: DataFrame, order: int,
                      lams: list | None = None,
                      id_col: str = "doc_id",

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .textstats import tokens
+
 _CHUNK_STRUCT = ("array<struct<chunk_idx: int, chunk_start: int,"
                  " n_chunk_tokens: int, chunk_text: string>>")
 
@@ -102,7 +104,7 @@ def chunk_documents(docs: DataFrame, max_len: int, stride: int,
     if not 0 < stride <= max_len:
         raise ValueError("need 0 < stride <= max_len, got "
                          f"stride={stride} max_len={max_len}")
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
+    toks = tokens(F.col(text_col))
 
     def chunks_of(tk):
         n = F.size(tk)

@@ -138,13 +138,6 @@ def gopher_gate(df: DataFrame, text_col: str = "text") -> DataFrame:
         gopher_quality_flags(F.col(text_col))["gopher_pass"])
 
 
-def stopword_hits(text_col, lang: str) -> Column:
-    """Count of signature-stopword occurrences as whole tokens."""
-    sig = LANG_SIGNATURES[lang]
-    toks = tokens(F.lower(text_col))
-    return F.size(F.filter(toks, lambda t: t.isin(sig)))
-
-
 def langid_guess(text_col) -> Column:
     """Pick the language whose signature hits most (ties → first key).
 

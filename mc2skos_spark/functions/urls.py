@@ -13,18 +13,13 @@ corpus text).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 #: URL span (scheme + non-space remainder) and the host-capture
 #: pattern applied to each span — both in the Java∩RE2 dialect so the
 #: DuckDB oracle runs the identical expressions.
 URL_PATTERN = r"https?://[^\s]+"
 HOST_PATTERN = r"https?://([A-Za-z0-9.-]+)"
-
-
-def url_count(col) -> Column:
-    """Number of URL spans in the text."""
-    return F.regexp_count(col, F.lit(URL_PATTERN))
 
 
 def domain_doc_counts(docs: DataFrame, id_col: str = "doc_id",

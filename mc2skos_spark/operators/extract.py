@@ -27,63 +27,38 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..core.api import build_vocabularies
 from ..core.errors import InvalidRecordError
 from ..core.extract import extract_concept
 from ..core.marcxml import parse_record_xml
 from ..core.triples import concept_to_triples
-from ..core.vocab import Vocabularies
 from ..plans import schemas
 
 _EXTRACTED_COLS = [f.name for f in schemas.EXTRACTED.fields]
 
 
-def _build_vocabularies(default_scheme) -> Vocabularies:
-    vocabularies = Vocabularies()
-    if default_scheme:
-        if isinstance(default_scheme, dict):
-            # CLI parity: --uri/--whitespace define an ad-hoc scheme
-            # (reference mc2skos.py:221-227 → vocabularies.py)
-            vocabularies.set_default_scheme(**default_scheme)
-        else:
-            vocabularies.set_default_scheme(scheme=default_scheme)
-    return vocabularies
-
-
-def _extract_batches(options: dict, default_scheme: str | None,
-                     options_by_key: dict | None = None):
-    """Build the mapInPandas function; everything it closes over is
-    picklable plain data (the Vocabularies registry is rebuilt per
-    executor — it is a few KB, the broadcast-dim analog).
-
-    ``options_by_key``: per-record conversion flags — ``{opt_key:
-    (options, default_scheme)}``; the input then carries an ``opt_key``
-    column and each record is extracted under its own flag set in the
-    SAME single pass (one DAG for a corpus of mixed vocabularies,
-    instead of one DAG per flag family).  Per-key registries are built
-    lazily once per python worker.
+def _extract_batches(options_by_key: dict):
+    """Build the mapInPandas function over ``{opt_key: (options,
+    default_scheme)}``; the input carries an ``opt_key`` column and each
+    record is extracted under its own flag set in the SAME single pass.
+    Everything it closes over is picklable plain data: each key's
+    Vocabularies registry (a few KB, the broadcast-dim analog) is built
+    once per python worker, on first use.
     """
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if options_by_key is None:
-            shared = (options, _build_vocabularies(default_scheme))
-            lookup = None
-        else:
-            shared = None
-            built: dict = {}
-
-            def lookup(key):
-                if key not in built:
-                    opts, scheme = options_by_key[key]
-                    built[key] = (dict(opts), _build_vocabularies(scheme))
-                return built[key]
+        built: dict = {}
         for batch in batches:
-            keys = (batch["opt_key"] if lookup is not None
-                    else [None] * len(batch))
             rows = []
             for record_id, xml, key in zip(batch["record_id"],
-                                           batch["record_xml"], keys):
-                row_options, vocabularies = (shared if lookup is None
-                                             else lookup(key))
+                                           batch["record_xml"],
+                                           batch["opt_key"]):
+                entry = built.get(key)
+                if entry is None:
+                    opts, scheme = options_by_key[key]
+                    entry = built[key] = (dict(opts),
+                                          build_vocabularies(scheme))
+                row_options, vocabularies = entry
                 try:
                     bag = extract_concept(parse_record_xml(xml),
                                           vocabularies, row_options)
@@ -124,34 +99,32 @@ def _extract_batches(options: dict, default_scheme: str | None,
 
 def extract_triples(records: DataFrame, options: dict | None = None,
                     default_scheme: str | None = None,
-                    partitions: int | None = None,
-                    balance: bool = True,
                     options_by_key: dict | None = None) -> DataFrame:
     """MARC_RECORDS → EXTRACTED (tagged union of triples + quarantine).
 
-    ``balance=True`` hash-repartitions by record_id so Arrow batches get
+    The input is hash-repartitioned by record_id into
+    ``spark.sql.shuffle.partitions`` partitions so Arrow batches get
     size-balanced partitions regardless of upstream skew (north_rule).
-    Pass ``balance=False`` when the input is already well-spread (e.g.
-    straight off the reassembly shuffle) to save one full-data shuffle.
 
     ``options_by_key``: per-record conversion flags (``{opt_key:
     (options, default_scheme)}``); ``records`` must then carry an
     ``opt_key`` column.  This is the production path for a corpus that
     mixes vocabularies with different flags — ONE extraction DAG, flags
     resolved per record inside the same Arrow pass, instead of one DAG
-    (and one shuffle set) per flag family.
+    (and one shuffle set) per flag family.  Without it, every record is
+    extracted under ``options``/``default_scheme`` (a one-key map).
     """
-    options = dict(options or {})
-    source = records
-    if balance:
-        if partitions is None:
-            partitions = records.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions")
-        source = records.repartition(int(partitions),
-                                     F.xxhash64("record_id"))
-    return source.mapInPandas(
-        _extract_batches(options, default_scheme, options_by_key),
-        schema=schemas.EXTRACTED)
+    if options_by_key is None:
+        options_by_key = {"": (options or {}, default_scheme)}
+        key = F.lit("")
+    else:
+        key = F.col("opt_key")
+    partitions = int(records.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions"))
+    return (records.select("record_id", "record_xml", key.alias("opt_key"))
+            .repartition(partitions, F.xxhash64("record_id"))
+            .mapInPandas(_extract_batches(options_by_key),
+                         schema=schemas.EXTRACTED))
 
 
 def triples_from_extracted(extracted: DataFrame,
@@ -180,16 +153,12 @@ def quarantine_from_extracted(extracted: DataFrame) -> DataFrame:
             .dropDuplicates(["record_id", "reason"]))
 
 
-def warnings_from_extracted(extracted: DataFrame,
-                            distinct_messages: bool = True) -> DataFrame:
-    """Non-fatal warnings per record; ``distinct_messages=True``
-    reproduces the reference's DuplicateFilter log suppression
-    (/root/reference/mc2skos/record.py:17-27) — one row per distinct
-    message instead of one per occurrence."""
-    warnings = (extracted.filter(F.col("row_kind") == "warning")
-                .select("record_id", "reason"))
-    if distinct_messages:
-        return (warnings.groupBy("reason")
-                .agg(F.min("record_id").alias("record_id"),
-                     F.count(F.lit(1)).alias("occurrences")))
-    return warnings
+def warnings_from_extracted(extracted: DataFrame) -> DataFrame:
+    """Non-fatal warnings, one row per distinct message — the
+    reference's DuplicateFilter log suppression
+    (/root/reference/mc2skos/record.py:17-27) instead of one row per
+    occurrence."""
+    return (extracted.filter(F.col("row_kind") == "warning")
+            .groupBy("reason")
+            .agg(F.min("record_id").alias("record_id"),
+                 F.count(F.lit(1)).alias("occurrences")))

@@ -154,7 +154,3 @@ def triples_to_ndjson(triples: DataFrame) -> DataFrame:
     return grouped.select(
         F.to_json(F.struct(F.col("subj").alias("uri"),
                            F.col("preds"))).alias("line"))
-
-
-def write_ndjson(triples: DataFrame, path: str) -> None:
-    triples_to_ndjson(triples).write.mode("overwrite").text(path)

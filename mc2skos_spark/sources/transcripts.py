@@ -31,14 +31,11 @@ from pyspark.sql import DataFrame, functions as F
 
 # A standalone serialized MARC record span, any namespace prefix.
 RECORD_SPAN_PATTERN = r"(?s)<(?:\w+:)?record[\s>].*?</(?:\w+:)?record>"
-# shared with the stateful-streaming path: record_id derivation must be
-# byte-identical between batch and streaming (tested), so there is ONE
-# 001-controlfield pattern
+# The 001 controlfield value: the record_id when present and non-empty.
 CONTROL_001_PATTERN = r'<(?:\w+:)?controlfield[^>]*tag="001"[^>]*>([^<]*)<'
 
 
 def reassemble_records(transcripts: DataFrame,
-                       payload_tool: str = "marc_export",
                        block_size: int | None = None) -> DataFrame:
     """Transcripts → MARC_RECORDS (record_id, conv_id, record_xml).
 
@@ -65,7 +62,7 @@ def reassemble_records(transcripts: DataFrame,
     path).
     """
     payload_turns = (transcripts
-                     .filter(F.col("tool") == payload_tool)
+                     .filter(F.col("tool") == "marc_export")
                      .select("conv_id", "turn_idx", "text"))
 
     def ordered_concat(order_col, text_col):
@@ -194,15 +191,3 @@ def _blocked_records(blocks: DataFrame, ordered_concat) -> DataFrame:
                     (F.col("offset") + F.col("local_idx")).alias("pos"),
                     "record_xml"))
 
-
-def roundtrip_check(transcripts: DataFrame, records: DataFrame,
-                    payload_tool: str = "marc_export") -> dict:
-    """Evidence for the per-turn-equality invariant: every payload byte
-    must land in exactly one reassembled record.  ``payload_tool`` must
-    match the value the records were reassembled with."""
-    payload_chars = (transcripts.filter(F.col("tool") == payload_tool)
-                     .agg(F.sum(F.length("text"))).collect()[0][0]) or 0
-    record_chars = (records.agg(F.sum(F.length("record_xml")))
-                    .collect()[0][0]) or 0
-    return {"payload_chars": int(payload_chars),
-            "record_chars": int(record_chars)}

@@ -5,8 +5,8 @@ tumbling event-time window with a watermark bounding how late a turn
 may arrive before its window is finalized and dropped from state —
 the standard Structured Streaming late-data contract.  (Reassembly
 itself deliberately does NOT use watermarks: conversation completeness
-is a correctness gate, handled by the stateful operator / foreachBatch
-pending-carry instead.)
+is a correctness gate, handled by the foreachBatch pending-carry in
+:mod:`.incremental` instead.)
 """
 
 from __future__ import annotations

@@ -211,3 +211,54 @@ def test_streaming_replay_idempotent(spark, tmp_path):
     streamed_after = {tuple(r) for r in
                       streamed_triples(spark, warehouse).collect()}
     assert streamed_after == streamed_before
+
+
+def test_streaming_mid_done_and_null_text_match_batch(spark, tmp_path):
+    """A mid-conversation assistant 'done' turn must not mask the
+    terminal marker when turns arrive out of order (the gate takes the
+    max done index), and a NULL-text payload turn contributes nothing
+    to the reassembled payload, as in the batch path."""
+    from datetime import datetime
+    xml = ('<record xmlns="http://www.loc.gov/MARC21/slim">'
+           '<leader>00000nw  a2200000n  4500</leader>'
+           '<controlfield tag="001">mid1</controlfield>'
+           '<controlfield tag="008">091203aaaaaaaa</controlfield>'
+           '<datafield tag="084" ind1="0" ind2=" ">'
+           '<subfield code="a">ddc</subfield>'
+           '<subfield code="c">23</subfield></datafield>'
+           '<datafield tag="153" ind1=" " ind2=" ">'
+           '<subfield code="a">111</subfield>'
+           '<subfield code="j">Caption</subfield></datafield>'
+           '</record>')
+    ts = datetime(2026, 1, 1)
+    half = len(xml) // 2
+    rows = [
+        ("c0", 0, "user", "export please", None, ts),
+        ("c0", 1, "assistant", "done", None, ts),      # mid-conv 'done'
+        ("c0", 2, "tool", xml[:half], "marc_export", ts),
+        ("c0", 3, "tool", None, "marc_export", ts),    # NULL payload
+        ("c0", 4, "tool", xml[half:], "marc_export", ts),
+        ("c0", 5, "assistant", "done", None, ts),      # terminal marker
+    ]
+    transcripts = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
+    input_dir = str(tmp_path / "in")
+    # one row per file, filename order ≠ turn order → the terminal
+    # 'done' is processed BEFORE the mid-conversation one
+    for i, row in enumerate(reversed(rows)):
+        spark.createDataFrame([row], schema=schemas.TRANSCRIPTS) \
+            .coalesce(1).write.parquet("%s/f%02d" % (input_dir, i))
+    warehouse = str(tmp_path / "wh")
+    # the file source does not recurse into the per-row directories
+    stream_transcripts(spark, input_dir + "/*", warehouse,
+                       str(tmp_path / "ckpt"), available_now=True,
+                       max_files_per_trigger=1)
+
+    def triple_set(df):
+        return {(r["subj"], r["pred"], r["obj"], r["obj_lang"],
+                 r["obj_datatype"], r["component_pos"])
+                for r in df.collect()}
+
+    batch = triple_set(triples_from_extracted(
+        extract_triples(reassemble_records(transcripts))))
+    assert batch, "the record must extract to triples"
+    assert triple_set(streamed_triples(spark, warehouse)) == batch

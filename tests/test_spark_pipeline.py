@@ -96,6 +96,84 @@ def test_quarantine_side_channel(spark):
     assert triples_from_extracted(extracted).count() > 0
 
 
+# two DDC records with 750 index terms (from tests/test_record_level.py):
+# their skos:altLabel triples appear only under include_altlabels
+_INDEX_TERM_XMLS = [
+    '<mx:record xmlns:mx="http://www.loc.gov/MARC21/slim">'
+    '<mx:leader>00000nw  a2200000n  4500</mx:leader>'
+    '<mx:controlfield tag="001">ocd00146759</mx:controlfield>'
+    '<mx:controlfield tag="008">100204aaaaaaaa</mx:controlfield>'
+    '<mx:datafield tag="084" ind2=" " ind1="0">'
+    '<mx:subfield code="a">ddc</mx:subfield>'
+    '<mx:subfield code="c">23no</mx:subfield></mx:datafield>'
+    '<mx:datafield tag="153" ind2=" " ind1=" ">'
+    '<mx:subfield code="a">543.17</mx:subfield>'
+    '<mx:subfield code="e">543.1</mx:subfield>'
+    '<mx:subfield code="j">Analytisk organisk kjemi</mx:subfield>'
+    '</mx:datafield>'
+    '<mx:datafield tag="750" ind2="7" ind1=" ">'
+    '<mx:subfield code="a">Analytisk kjemi</mx:subfield>'
+    '<mx:subfield code="x">organisk kjemi</mx:subfield>'
+    '<mx:subfield code="0">(OCoLC-D)8c2057ce</mx:subfield>'
+    '<mx:subfield code="2">ddcri</mx:subfield></mx:datafield>'
+    '</mx:record>',
+    '<mx:record xmlns:mx="http://www.loc.gov/MARC21/slim">'
+    '<mx:leader>00000nw  a2200000n  4500</mx:leader>'
+    '<mx:controlfield tag="008">091203aaaaaabb</mx:controlfield>'
+    '<mx:datafield tag="084" ind2=" " ind1="0">'
+    '<mx:subfield code="a">ddc</mx:subfield>'
+    '<mx:subfield code="c">23no</mx:subfield>'
+    '<mx:subfield code="e">nob</mx:subfield></mx:datafield>'
+    '<mx:datafield tag="153" ind2=" " ind1=" ">'
+    '<mx:subfield code="a">006.686</mx:subfield>'
+    '<mx:subfield code="e">006.68</mx:subfield>'
+    '<mx:subfield code="9">ess=ien</mx:subfield></mx:datafield>'
+    '<mx:datafield tag="730" ind2="7" ind1=" ">'
+    '<mx:subfield code="a">CorelDRAW</mx:subfield>'
+    '<mx:subfield code="0">(OCoLC-D)99928acf</mx:subfield>'
+    '<mx:subfield code="2">ddcri</mx:subfield>'
+    '<mx:subfield code="9">ps=EO</mx:subfield></mx:datafield>'
+    '</mx:record>',
+]
+
+
+def test_extract_options_by_key_matches_core_per_family(spark):
+    """Records with an ``opt_key`` column are each extracted under
+    their own flag set in one pass: the result is the union of
+    ``core.api.process_records`` per family, and swapping the keys
+    changes it (a key mix-up cannot pass)."""
+    from mc2skos_spark.core.api import process_records
+
+    families = {"alt": ({"include_altlabels": True}, None),
+                "plain": ({}, None)}
+    keyed = list(zip(["alt", "plain"], _INDEX_TERM_XMLS))
+    df = spark.createDataFrame(
+        [("r%d" % i, "c0", xml, key) for i, (key, xml) in enumerate(keyed)],
+        "record_id string, conv_id string, record_xml string, "
+        "opt_key string")
+    cols = ["subj", "pred", "obj", "obj_is_literal", "obj_lang",
+            "obj_datatype", "component_pos"]
+    got = {tuple(r) for r in triples_from_extracted(
+        extract_triples(df, options_by_key=families))
+        .select(*cols).collect()}
+
+    def union(assignment):
+        out = set()
+        for key, xml in assignment:
+            options, scheme = families[key]
+            out |= set(process_records([xml], options,
+                                       default_scheme=scheme))
+        return out
+
+    expected = union(keyed)
+    swapped = union(zip(["plain", "alt"], _INDEX_TERM_XMLS))
+    assert got == expected
+    assert got != swapped
+    labels = {t[2] for t in got if t[1] == C.SKOS + "altLabel"}
+    assert "Analytisk kjemi--organisk kjemi" in labels
+    assert "CorelDRAW" not in labels
+
+
 def test_expand_inferred_bk_narrower(spark):
     """--expand derives bk:54 skos:narrower bk:54.65
     (/root/reference/test/test_skosify.py:19-23)."""

@@ -1,6 +1,6 @@
 """Native session-window streaming: append-mode output must equal the
 batch sessionizer on the same events (modulo Spark's [first, last+gap)
-window-end convention)."""
+window-end convention); plus the watermarked turn-rate window metrics."""
 
 import datetime as dt
 import os
@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from mc2skos_spark.operators.sessionize import session_stats
+from mc2skos_spark.plans import schemas
+from mc2skos_spark.sources.synth import make_transcript_rows, synth_marc_records
 from mc2skos_spark.streaming.sessions import streaming_session_stats
 
 pytestmark = pytest.mark.spark
@@ -96,3 +98,36 @@ def test_streaming_sessions_batch_df_no_watermark_effect(spark):
             // dt.timedelta(microseconds=1)
 
     assert out == {(1, us(0)): 2, (1, us(40)): 1}
+
+
+def test_watermarked_turn_rate_metrics(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from mc2skos_spark.streaming.metrics import turn_rate_metrics
+
+    rows = make_transcript_rows(synth_marc_records(20, seed=45), seed=46)
+    transcripts = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
+    input_dir = str(tmp_path / "metrics_in")
+    transcripts.repartition(4).write.parquet(input_dir)
+
+    stream = (spark.readStream.schema(schemas.TRANSCRIPTS)
+              .option("maxFilesPerTrigger", "1")
+              .parquet(input_dir))
+    out = str(tmp_path / "metrics_out")
+    q = (turn_rate_metrics(stream).writeStream
+         .format("parquet").option("path", out)
+         .option("checkpointLocation", str(tmp_path / "metrics_ck"))
+         .outputMode("append")
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+
+    metrics = spark.read.parquet(out)
+    finalized = metrics.agg(F.sum("turns")).collect()[0][0] or 0
+    total = transcripts.count()
+    # append mode withholds windows the watermark has not passed — the
+    # finalized windows must never overcount, and with synth timestamps
+    # spanning minutes most windows do finalize
+    assert 0 < finalized <= total
+    row = metrics.orderBy("window_start").first()
+    assert row["payload_turns"] <= row["turns"]
+    assert row["window_end"] > row["window_start"]

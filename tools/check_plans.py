@@ -74,7 +74,8 @@ ALLOW: dict[str, dict[str, str]] = {
     },
     "dsir_en_weights": {
         "BroadcastNestedLoopJoin":
-            "1-row target/raw total-count attach for the log-ratio",
+            "1-row bucket -> log-ratio map broadcast-attached to every "
+            "document for the per-document fold",
     },
     "sketch_distinct_tokens": {
         "BroadcastNestedLoopJoin":
