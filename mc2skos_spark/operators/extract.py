@@ -155,9 +155,8 @@ def quarantine_from_extracted(extracted: DataFrame) -> DataFrame:
 
 def warnings_from_extracted(extracted: DataFrame) -> DataFrame:
     """Non-fatal warnings, one row per distinct message — the
-    reference's DuplicateFilter log suppression
-    (/root/reference/mc2skos/record.py:17-27) instead of one row per
-    occurrence."""
+    reference's DuplicateFilter log suppression (mc2skos/record.py:17-27)
+    instead of one row per occurrence."""
     return (extracted.filter(F.col("row_kind") == "warning")
             .groupBy("reason")
             .agg(F.min("record_id").alias("record_id"),
